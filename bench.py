@@ -24,6 +24,14 @@ from pyspark.sql import functions as F  # noqa: E402
 from montecarlopagerank_spark.session import get_spark  # noqa: E402
 
 
+def load_warning(load1: float, cpus: int) -> str | None:
+    """Flag a bench run that started on a loaded host: a 1-minute loadavg
+    above a quarter of the cores already skews per-query times."""
+    if load1 > cpus / 4:
+        return f"1-min loadavg {load1} at start exceeds cpus/4 = {cpus / 4:g}"
+    return None
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").split("sf")[-1]
@@ -545,6 +553,9 @@ def main() -> None:
                         round(x, 2) for x in os.getloadavg()
                     ],
                     "cpu_count": os.cpu_count(),
+                    "load_warning": load_warning(
+                        load_at_start[0], os.cpu_count() or 1
+                    ),
                 },
                 "extra": extra,
             }

@@ -22,108 +22,86 @@ vertex (the reference's ``0 to currentCount`` inclusive loop inflates by
 one trial per occupied vertex per step) and exactly ``iterations``
 supersteps.
 
-Scale shape — the scratch fast path compiles the ENTIRE superstep loop
-(in segments of ``fuse_steps``) into ONE Spark job with EXACTLY ONE
-shuffle per superstep; the checkpointed durable path pays one job and
-two shuffles per step, the price of resumable parquet state:
+Scale shape — ONE plan for every graph, hubs or not. Coupon state is a
+routed table ``(block_id, rkey, c)`` and each superstep is ONE stage:
+[complete (block_id, rkey) coalescing agg → walk UDF → exchange by
+block_id]. The walk UDF (``_step_kernel``) runs the walk+coalesce core
+(``_walk_kernel``) on one block and routes the block's arrivals itself
+(``_route``), so the exchange pre-positions them for the next step's
+kernel. The agg and the kernel both run on the hash(block_id)
+partitioning of the step's single exchange (clustering by a subset of the
+grouping keys needs no second exchange).
 
-1. each superstep is ONE stage: [complete (block_id, rkey) coalescing
-   agg → sort → grouped-map walk kernel → expression route → exchange
-   by block_id]. The agg and the kernel both run on the hash(block_id)
-   partitioning established by the step's single exchange (clustering
-   by a subset of the grouping keys needs no second exchange), and each
-   step's exchange is consumed twice in the same plan — next step's agg
-   and the segment's ζ union — deduped to one shuffle by
-   ReusedExchange. No per-step job gap, no per-step localCheckpoint
-   store/rescan (the round-2 per-step-job design lost ~22% of the
-   4N-core legs to exactly those barriers). The loop runs with AQE off:
-   adaptive planning hides checkpointed partitionings and would
-   re-exchange the segment carry-over state; the loop is fully static
-   so AQE has nothing to add. The graph itself is
-   **host-resident**: CSR blocks are written ONCE at setup as parquet
-   side-files partitioned by block_id, and the PACK KERNEL ITSELF
+1. The scratch fast path compiles ``fuse_steps`` supersteps into ONE
+   Spark job with exactly one shuffle per step: each step's exchange is
+   consumed twice — next step's agg and the segment's ζ union — and
+   ReusedExchange dedupes it. No per-step job gap and no per-step
+   store/rescan. The loop runs with AQE off: adaptive planning hides
+   materialized partitionings and the loop is fully static anyway. With
+   ``checkpoint_dir`` each step's routed table goes to parquet instead
+   (durable, resumable) through the SAME kernel and router; parquet
+   erases partitioning, so that path pays two exchanges per step.
+2. The graph is **host-resident**: CSR blocks are written ONCE at setup
+   as parquet side-files partitioned by block_id, and the pack kernel
    publishes each block's decoded numpy arrays as ``.npy`` files under
-   ``_decoded/`` at pack time (atomic dir rename; it has the arrays in
-   hand at that moment, so the warm pass never re-reads the parquet it
-   just wrote — measured sub-second at any core count). Every worker
-   serves from ``np.memmap`` views of those files (``_CSR_CACHE``) —
-   one decode and one page-cache copy per block per HOST, not per
-   worker. On a multi-host cluster the packing host is pre-published;
-   other hosts lazily decode+publish on first touch (the earlier
-   per-worker in-memory caches decoded the graph N_workers× and held
-   N_workers copies: the anti-scaling warm phase of round 3's
-   BENCH/scaling.json — 8 s at 2 cores vs 48 s at 8 on 100M edges).
-   Earlier still, designs cogrouped a JVM-cached CSR table into the
-   kernel, which re-shipped the whole graph JVM→Arrow→Python EVERY
-   superstep — measured 429 MB/step at 100M edges, pure memory-bandwidth
-   burn that capped N-vs-4N scaling efficiency at ~0.71 (the contended
-   4N side pays more per byte). Pregel-style resident graph state is
-   also the honest 10^12-edge design: on a real cluster each executor's
-   workers converge on their partition's blocks (stable hash
-   partitioning), so the side-file fetch+decode is one-time per host,
-   amortized across all supersteps of all queries. The kernel is
-   ``applyInArrow`` with int32 neighbour ids when the vertex space fits;
-2. arrivals route to THEIR OWN blocks — a vertex's block is a pure
-   chained-comparison **expression** over the block boundaries
-   (``route_expr``, no routing-table join) — and the step's one exchange
-   by block_id pre-positions them for the next superstep's kernel.
-   Per-step surviving-walk totals ride the segment job as
-   ``CollectMetrics`` on the ζ branches (extinction check without an
-   ``isEmpty`` job, at segment granularity).
-
-With ``checkpoint_dir`` the state goes to parquet per step instead
-(durable, resumable) — parquet erases partitioning, so that path pays
-the classic two exchanges per step (groupBy(dst) coalesce + next step's
-routing exchange), the price of durability.
+   ``_decoded/`` at pack time. Every worker serves from ``np.memmap``
+   views of those files (``_CSR_CACHE``) — one decode and one page-cache
+   copy per block per HOST, never re-shipped through the Arrow exchange
+   per superstep (the earlier cogrouped-CSR design moved 429 MB/step at
+   100M edges). On a multi-host cluster other hosts decode+publish
+   lazily on first touch.
+3. Routing is numpy inside the UDF, over a ``RoutePlan`` collected once
+   at plan time. A non-hub arrival goes to the ACTUAL id of the block
+   whose rkey range holds it (``np.searchsorted`` over the block
+   boundaries). A hub — a vertex with out_deg above the split threshold,
+   whose edges the planner (operators/adjacency.py::plan_walk_blocks)
+   spreads over replicas with disjoint neighbour subsets — gets each
+   emitting block's arrival count split across its replicas with an
+   exact multinomial ∝ replica size, drawn from a generator seeded by
+   (seed, block_id, step). A sum of independent Multinomial(cᵢ, p) is
+   Multinomial(Σcᵢ, p), so splitting per emitting block keeps the law of
+   per-vertex splitting: totals are conserved exactly and
+   P(dst) = (rsize/deg)·(1/rsize) = 1/deg. Each walk step is a uniform
+   sample from coupon⋈adjacency (Random Sampling over Joins Revisited,
+   SIGMOD 2018).
 
 ζ is NOT re-aggregated per step (the reference's ``union+reduceByKey``
 over the full visit history, MonteCarloPageRank.scala:122, doubles
-per-step shuffle volume); each step's routed arrivals feed a ζ branch of
-the same segment job (reading the step's already-written shuffle), and
-the segment folds them into one (rkey, c) accumulator — rows with equal
-rkey share a block hence a partition, so the partial agg fully coalesces
-each branch before the one hash(rkey) exchange. v = rkey >> REPLICA_BITS
-folds hub replicas back together at finalize.
+per-step shuffle volume): each step's routed arrivals feed a ζ branch of
+the same segment job and the segment folds them into one (rkey, c)
+accumulator. v = rkey >> REPLICA_BITS folds hub replicas back together
+at finalize. Per-step surviving-walk totals ride the jobs as observed
+metrics (extinction check without an ``isEmpty`` job).
 
-Skew (north_star "hub vertices split across ≥2 blocks"): the block plan
-(operators/adjacency.py::plan_walk_blocks) splits any vertex whose
-out-degree exceeds ``edges_per_block`` into replicas carrying disjoint
-neighbour subsets. A hub's coupons are routed to its replicas with an
-exact multinomial draw ∝ replica size (seeded per (seed, step, v) — a
-tiny Arrow kernel over hub rows only), each replica walks its slice
-uniformly, and the ordinary groupBy(dst) coalescing re-reduces the
-partials — so totals are conserved exactly and P(dst) = 1/deg exactly.
-Hub coupons are peeled off the expression-routing path with a literal
-``isin`` filter (hub ids are known at plan time and few by definition).
-
-Randomness is **parallelism-invariant**: one ``numpy.random.Generator``
-per (seed, block_id, superstep) — a stable *logical* block id, not the
-reference's physical partition index (MonteCarloPageRank.scala:50-52) —
-so any fixed (seed, edges_per_block) produces byte-identical ranks at
-local[8] and local[32]. That property is what lets the N-vs-4N scaling
-run double as a determinism check. The default ``edges_per_block``
-derives from the cluster's core count, so pass an explicit value when
-outputs must match across different cluster sizes.
+Randomness is **parallelism-invariant**: walks draw from one
+``numpy.random.Generator`` per (seed, block_id, superstep) — a stable
+*logical* block id, not the reference's physical partition index
+(MonteCarloPageRank.scala:50-52) — and hub splits from a separate
+stream of the same key, so any fixed (seed, edges_per_block) produces
+byte-identical ranks at local[8] and local[32]. The default
+``edges_per_block`` derives from the cluster's core count, so pass an
+explicit value when outputs must match across different cluster sizes.
 
 The walk step itself is fully vectorized numpy over CSR slices: binomial
-survivor draws, then one uniform draw per surviving walk mapped through
-(indptr, indices) with np.repeat — no per-walk Python.
+survivor draws, then one float64 uniform per surviving walk mapped
+through (indptr, indices) with np.repeat — no per-walk Python, and the
+pick stays uniform to within deg/2^53 at any degree.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 import time
 from collections import OrderedDict
 from functools import reduce
-from typing import Any
+from typing import Any, NamedTuple
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyarrow import fs as pafs
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -136,50 +114,16 @@ from montecarlopagerank_spark.operators.state import StateStore
 
 EPS = 0.15
 
-# above this many blocks a chained-WHEN routing expression stops being
-# codegen-friendly; fall back to an interpreted array fold (O(B) per row
-# either way, but the WHEN chain compiles to straight-line comparisons)
-MAX_CHAINED_BOUNDS = 512
+# every coupon table and every walk step's output: arrivals routed to the
+# block that walks them next
+ROUTED_SCHEMA = "block_id int, rkey long, c long"
 
-
-def route_expr(
-    rkey_col: Column, bounds: list[int], block_ids: list[int] | None = None
-) -> Column:
-    """ACTUAL block_id for a coupon rkey. ``bounds[i]`` is the min rkey of
-    the block whose id is ``block_ids[i]`` (both ascending). Blocks pack
-    contiguous rkey ranges (plan_walk_blocks), so this single expression
-    replaces the routing-table join — the routing stage is a narrow map
-    over the coupon scan.
-
-    ``block_ids`` matters because planner ids can SKIP values (row weight
-    rsize+1 → the prefix floor-division jumps an id when out_deg ==
-    edges_per_block, and hub replicas can jump further): the CSR
-    side-files are partitioned by the actual ids, so routing by the
-    positional boundary index would address nonexistent block dirs and
-    silently kill those walks (tests/test_pagerank.py::
-    test_route_expr_skipped_block_ids). ``None`` = dense ids 0..B-1."""
-    if block_ids is None:
-        block_ids = list(range(len(bounds)))
-    inner = bounds[1:]
-    if not inner:
-        return F.lit(block_ids[0] if block_ids else 0)
-    if len(inner) <= MAX_CHAINED_BOUNDS:
-        # FLAT CaseWhen (chained .when on one Column), not nested
-        # when().otherwise(when()...): a nested chain recurses once per
-        # branch during expression conversion and overflows the JVM stack
-        # near ~500 branches (found by test_route_expr_both_paths)
-        expr = F.when(rkey_col < F.lit(inner[0]), F.lit(block_ids[0]))
-        for i in range(1, len(inner)):
-            expr = expr.when(rkey_col < F.lit(inner[i]), F.lit(block_ids[i]))
-        return expr.otherwise(F.lit(block_ids[len(inner)])).cast("int")
-    # interpreted fallback: count boundaries ≤ rkey, then map the
-    # positional index through the actual-id array literal
-    pos = F.aggregate(
-        F.lit(inner),
-        F.lit(0),
-        lambda acc, b: acc + F.when(rkey_col >= b, 1).otherwise(0),
-    )
-    return F.element_at(F.lit(block_ids), pos + 1).cast("int")
+# SeedSequence spawn keys of the hub-split streams. The walk stream keys
+# on entropy (seed, block_id, step) alone; a spawn key appends words after
+# the zero-padded entropy pool, so these streams never collide with it or
+# with each other
+_HUB_STREAM = (1,)
+_INIT_STREAM = (2,)
 
 
 # Host-resident CSR blocks: (csr_path, block_id) → (vids, indptr,
@@ -202,15 +146,25 @@ _CSR_ARRAYS = ("vids", "indptr", "indices")
 
 
 def _strip_file_scheme(path: str) -> str | None:
-    """``file:`` URI → plain local path, else None. Handles BOTH slash
-    forms: ``file:///p`` / ``file://p`` AND the Hadoop/Spark-normalized
-    single-slash ``file:/p`` (``Path.toString`` emits that form), which
-    has no ``://`` and previously fell through both ``_resolve_fs`` and
-    the publish-root stripping — so ``_publish_block`` os.makedirs'd a
-    literal cwd-relative ``file:`` directory (the r4 junk-dir bug)."""
+    """``file:`` URI → plain local path, else None. Accepts the empty-
+    authority form ``file:///p`` AND the Hadoop/Spark-normalized
+    single-slash ``file:/p`` (``Path.toString`` emits that form; it has
+    no ``://``, and once made ``_publish_block`` create a literal
+    cwd-relative ``file:`` directory). Raises ValueError on a host
+    (``file://host/p``) or a relative remainder (``file:rel/p``): neither
+    names a local absolute path, and guessing one would silently read or
+    write the wrong directory."""
     if not path.startswith("file:"):
         return None
-    return "/" + path[5:].lstrip("/")
+    rest = path[5:]
+    if rest.startswith("//"):
+        host, _, tail = rest[2:].partition("/")
+        if host:
+            raise ValueError(f"file URI with a host is not a local path: {path!r}")
+        rest = "/" + tail
+    if not rest.startswith("/"):
+        raise ValueError(f"relative file URI: {path!r}")
+    return "/" + rest.lstrip("/")
 
 
 def _resolve_fs(path: str) -> tuple[pafs.FileSystem, str]:
@@ -449,7 +403,7 @@ def _walk_kernel(csr_path: str, eps: float, seed: int, step: int):
     resident cache (see ``_CSR_CACHE``), NOT through the Arrow exchange.
     Deterministic in (seed, block_id, step). Coupons are keyed by rkey
     (= v << REPLICA_BITS | replica); rkeys not present in the block's CSR
-    rows (dangling vertices routed here by the pure-expression router)
+    rows (dangling vertices routed to the block covering their rkey)
     contribute nothing — their walks die, which is the reference's
     dangling semantics (MonteCarloPageRank.scala:73)."""
 
@@ -480,28 +434,17 @@ def _walk_kernel(csr_path: str, eps: float, seed: int, step: int):
         total = int(survivors.sum())
         if total == 0:
             return empty
-        # Per-WALK temp arrays dominate the loop's DRAM traffic (the
-        # stage is memory-bound: BENCH/BASELINE.md's 2→8-core task-time
-        # inflation). indptr[locc] and k are per-ROW (small) — downcast
-        # them BEFORE the per-walk np.repeat so starts/lens/pick are all
-        # 4-byte and the uniform draws are float32, halving bytes/walk.
-        # Guards: int32 offsets need < 2^31 edges in the block (true by
-        # construction, blocks are ~2/slot), float32 picks need every
-        # degree < 2^24 so idx*lens keeps unit precision. The branch
-        # depends only on block content → identical at any parallelism
-        # (the invariance BENCH/scaling.json proves byte-for-byte).
-        if len(indices) < (1 << 31) and int(k.max()) < (1 << 24):
-            starts = np.repeat(indptr[locc].astype(np.int32), survivors)
-            lens = np.repeat(k.astype(np.int32), survivors)
-            pick = (rng.random(total, dtype=np.float32) * lens).astype(
-                np.int32
-            )
-            # f32 product rounding can land exactly on lens — clamp
-            np.minimum(pick, lens - 1, out=pick)
-        else:
-            starts = np.repeat(indptr[locc], survivors)
-            lens = np.repeat(k, survivors)
-            pick = (rng.random(total) * lens).astype(np.int64)
+        # Per-WALK temp arrays dominate the loop's DRAM traffic, so the
+        # per-ROW offsets and degrees are downcast BEFORE the np.repeat
+        # (int32 offsets need < 2^31 edges in the block — true by
+        # construction, blocks are ~2/slot). The uniforms stay float64:
+        # floor(u·deg) is then uniform over a vertex's out-edges to within
+        # deg/2^53, where a float32 draw (2^24 values) biases the picks at
+        # high-degree vertices by up to ~deg/2^24
+        off_t = np.int32 if len(indices) < (1 << 31) else np.int64
+        starts = np.repeat(indptr[locc].astype(off_t), survivors)
+        lens = np.repeat(k.astype(off_t), survivors)
+        pick = (rng.random(total) * lens).astype(off_t)
         dest = indices[starts + pick]
         dst, cnt = np.unique(dest, return_counts=True)  # per-block coalescing
         return pa.table(
@@ -514,29 +457,125 @@ def _walk_kernel(csr_path: str, eps: float, seed: int, step: int):
     return kernel
 
 
-def _route_kernel(seed: int, step: int):
-    """Grouped-map kernel over ONE hub vertex's replica rows: split the
-    vertex's coupon count c across replicas with an exact multinomial draw
-    ∝ replica size — conserves Σc and keeps P(dst) = 1/deg exactly.
-    Deterministic in (seed, step, v)."""
+class RoutePlan(NamedTuple):
+    """What the in-UDF router needs, collected once at plan time.
+    ``bounds[i]`` is the min rkey of the block whose ACTUAL id is
+    ``block_ids[i]`` (both ascending). ``hub_ids`` (sorted) are the split
+    vertices; ``hub_reps[i]`` holds hub i's replicas in rkey order as
+    (block ids, rkeys, pick probabilities ∝ rsize). Hubs are few by
+    definition (out_deg above the split threshold)."""
 
-    def route(pdf: pd.DataFrame) -> pd.DataFrame:
-        v = int(pdf["v"].iloc[0])
-        c = int(pdf["c"].iloc[0])
-        pdf = pdf.sort_values("rkey", kind="mergesort")  # determinism
-        sizes = pdf["rsize"].to_numpy(dtype=np.float64)
+    bounds: np.ndarray
+    block_ids: np.ndarray
+    hub_ids: np.ndarray
+    hub_reps: list[tuple[np.ndarray, np.ndarray, np.ndarray]]
+
+
+def _route_plan(bounds: list[int], block_ids: list[int], hub_rows) -> RoutePlan:
+    """``hub_rows``: (v, block_id, rkey, rsize) of every replica of every
+    split vertex."""
+    by_v: dict[int, list[tuple[int, int, int]]] = {}
+    for v, b, rk, rs in sorted(hub_rows, key=lambda r: r[2]):
+        by_v.setdefault(int(v), []).append((b, rk, rs))
+    reps = []
+    for v in sorted(by_v):
+        b, rk, rs = (np.asarray(x) for x in zip(*by_v[v]))
+        reps.append((b.astype(np.int32), rk.astype(np.int64), rs / rs.sum()))
+    return RoutePlan(
+        np.asarray(bounds, dtype=np.int64),
+        np.asarray(block_ids, dtype=np.int32),
+        np.asarray(sorted(by_v), dtype=np.int64),
+        reps,
+    )
+
+
+def _block_of(rkey: np.ndarray, bounds: np.ndarray, block_ids: np.ndarray) -> np.ndarray:
+    """ACTUAL block id of each rkey: blocks pack contiguous rkey ranges
+    (plan_walk_blocks), so a key belongs to the block of the last boundary
+    ≤ it (keys below the first boundary — dangling vertices — to the
+    first block). Planner ids can SKIP values (row weight rsize+1 → the
+    prefix floor-division jumps an id when out_deg == edges_per_block,
+    and hub replicas can jump further); the CSR side-files are
+    partitioned by the actual ids, so routing by the positional boundary
+    index would address nonexistent block dirs and silently kill those
+    walks (tests/test_pagerank.py::test_mc_skipped_block_id_walks_survive)."""
+    if len(bounds) == 0:
+        return np.zeros(len(rkey), dtype=np.int32)
+    pos = np.searchsorted(bounds, rkey, side="right") - 1
+    return block_ids[np.maximum(pos, 0)]
+
+
+def _route(plan: RoutePlan, v: np.ndarray, c: np.ndarray, hub_rng):
+    """Unique vertices ``v`` with coupon counts ``c`` → routed
+    (block_id, rkey, c) arrays. A hub's count is split across its
+    replicas by ONE exact multinomial ∝ rsize drawn from ``hub_rng(v)``
+    (conserves c; P(replica) = rsize/deg). Hubs are drawn in input order,
+    so the split is deterministic in the input and the generators."""
+    rkey = v.astype(np.int64) << REPLICA_BITS
+    bid = _block_of(rkey, plan.bounds, plan.block_ids)
+    if len(plan.hub_ids) == 0:
+        return bid, rkey, c
+    at = np.searchsorted(plan.hub_ids, v)
+    hub = plan.hub_ids[np.minimum(at, len(plan.hub_ids) - 1)] == v
+    if not hub.any():
+        return bid, rkey, c
+    parts = [(bid[~hub], rkey[~hub], c[~hub])]
+    for i in np.flatnonzero(hub):
+        rep_bid, rep_rkey, p = plan.hub_reps[at[i]]
+        n = hub_rng(int(v[i])).multinomial(int(c[i]), p)
+        keep = n > 0
+        parts.append((rep_bid[keep], rep_rkey[keep], n[keep]))
+    return tuple(np.concatenate(x) for x in zip(*parts))
+
+
+def _routed_table(bid: np.ndarray, rkey: np.ndarray, c: np.ndarray) -> pa.Table:
+    return pa.table(
+        {
+            "block_id": pa.array(bid, pa.int32()),
+            "rkey": pa.array(rkey, pa.int64()),
+            "c": pa.array(c, pa.int64()),
+        }
+    )
+
+
+def _step_kernel(csr_path: str, eps: float, seed: int, step: int, plan: RoutePlan):
+    """The walk UDF: ONE block's coupons → walk + per-block coalescing
+    (``_walk_kernel``) → arrivals routed to the blocks that walk them at
+    step + 1. Hub splits draw from the (seed, block_id, step) hub stream;
+    the blocks emitting to one hub draw independently, and a sum of
+    independent Multinomial(cᵢ, p) is Multinomial(Σcᵢ, p)."""
+    walk = _walk_kernel(csr_path, eps, seed, step)
+
+    def kernel(coupons_t: pa.Table) -> pa.Table:
+        moved = walk(coupons_t)
+        dst = moved.column("dst").to_numpy(zero_copy_only=False)
+        cnt = moved.column("cnt").to_numpy(zero_copy_only=False)
+        if len(dst) == 0:  # no survivors: an empty routed table
+            return _routed_table(dst, dst, cnt)
+        block_id = int(coupons_t.column("block_id")[0].as_py())
         rng = np.random.default_rng(
-            np.random.SeedSequence([seed, 0x517, step, v])
+            np.random.SeedSequence([seed, block_id, step], spawn_key=_HUB_STREAM)
         )
-        parts = rng.multinomial(c, sizes / sizes.sum())
-        keep = parts > 0
-        return pd.DataFrame(
-            {
-                "block_id": pdf["block_id"].to_numpy()[keep],
-                "rkey": pdf["rkey"].to_numpy(dtype=np.int64)[keep],
-                "c": parts[keep].astype(np.int64),
-            }
+        return _routed_table(*_route(plan, dst, cnt, lambda _v: rng))
+
+    return kernel
+
+
+def _init_router(plan: RoutePlan, K: int, seed: int):
+    """mapInArrow body: vertex ids → their K initial coupons, routed. Each
+    hub vertex is split from its own (seed, v) stream, so the split does
+    not depend on how the vertex set is partitioned."""
+
+    def hub_rng(v: int) -> np.random.Generator:
+        return np.random.default_rng(
+            np.random.SeedSequence([seed, v], spawn_key=_INIT_STREAM)
         )
+
+    def route(batches):
+        for b in batches:
+            v = b.column("v").to_numpy(zero_copy_only=False)
+            c = np.full(len(v), K, dtype=np.int64)
+            yield from _routed_table(*_route(plan, v, c, hub_rng)).to_batches()
 
     return route
 
@@ -553,7 +592,7 @@ def pagerank_monte_carlo(
     checkpoint_dir: str | None = None,
     resume: bool = False,
     state_root: str | None = None,
-    fuse_steps: int | None = None,
+    fuse_steps: int = 6,
 ) -> tuple[DataFrame, dict[str, Any]]:
     """Returns (``ranks(v:long, rank:double)``, info). Rank = ζ_v / Σζ.
 
@@ -568,24 +607,28 @@ def pagerank_monte_carlo(
     into ONE Spark job before the superstep chain is materialized; it
     bounds logical-plan size, not correctness — any value ≥ 1 produces
     identical ranks (the RNG is seeded per logical (block, step), never
-    per job). Default (None) derives it from the block plan: 6 on
-    hub-free graphs, 1 when hub splitting is active. The fused plan is a
-    logical TREE, not a DAG: each step's exchange is consumed by the next
-    step's agg AND the segment's ζ branch (×2/step), and the hub router
-    splits the arrivals into a non-hub and a hub branch (×3/step with
-    hubs) — ReusedExchange dedups execution but the ANALYZER walks the
-    un-deduped tree, so DeduplicateRelations pays O(2^k) (hub-free) or
-    O(3^k) (hubs) per segment. k=6 hub-free is ~seconds of driver CPU at
-    any data size; k=8 with split hubs was measured >8 min of pure
-    analysis on a 230k-edge graph. Raise it only for hub-free graphs
-    whose per-step work dwarfs the per-job fixed cost.
+    per job). The fused plan is a logical TREE, not a DAG: each step's
+    exchange is consumed by the next step's agg AND the segment's ζ
+    branch — ReusedExchange dedups execution, but the ANALYZER walks the
+    un-deduped tree, so DeduplicateRelations pays O(2^k) per segment.
+    Routing inside the walk UDF keeps that base at 2 on hub graphs too;
+    k=6 is ~seconds of driver CPU at any data size. Raise it only when
+    per-step work dwarfs the per-job fixed cost.
+
+    ``checkpoint_dir`` makes the run durable: each superstep's routed
+    coupon table is committed as a checkpoint step, and ``resume=True``
+    continues from the last committed one. Resuming requires the same
+    (K, eps, seed) and the same block layout; a checkpoint written under
+    another configuration — or by the older coupon format keyed by
+    vertex — raises ValueError rather than resuming wrongly.
 
     ``state_root`` relocates the scratch state (CSR side-files + per-step
-    coupon tables). It may be a filesystem URI (``file://``, ``hdfs://``,
-    ``s3://``): the workers' resident-CSR reads resolve it through
-    ``pyarrow.fs`` (``_resolve_fs``), so superstep state can live on DFS —
-    the real-cluster deployment shape. Caller owns cleanup of a given
-    root; the default mkdtemp scratch is reclaimed at interpreter exit."""
+    coupon tables). It may be a filesystem URI (``file:///p``,
+    ``hdfs://``, ``s3://``): the workers' resident-CSR reads resolve it
+    through ``pyarrow.fs`` (``_resolve_fs``), so superstep state can live
+    on DFS — the real-cluster deployment shape. Caller owns cleanup of a
+    given root; the default mkdtemp scratch is reclaimed at interpreter
+    exit."""
     t_setup = time.time()
     K = max(walks_per_vertex, 1)  # MonteCarloPageRank.scala:101
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -612,12 +655,6 @@ def pagerank_monte_carlo(
         # (a raw file:// URI would os.makedirs a literal "file:" dir)
         publish_root=_resolve_fs(csr_path)[1] if _is_local(csr_path) else None,
     )
-    edges_per_block = plan_meta["edges_per_block"]
-    if fuse_steps is None:
-        # analyzer cost is exponential in segment length (see docstring):
-        # base 3 with hub splitting, base 2 without — keep k where the
-        # driver-side analysis stays in the noise
-        fuse_steps = 1 if plan_meta["has_hubs"] else 6
     t_plan1 = time.time()
     # NO repartition before the write: the pack kernel's own groupBy
     # exchange already produced block_id-partitioned output (64 fat rows),
@@ -640,99 +677,54 @@ def pagerank_monte_carlo(
     warm_csr_workers(spark, csr_path)  # Pregel graph-load: resident
     # caches fill once per worker here, not inside superstep 0
     t_csr = time.time()
-    bounds = plan_meta["bounds"]
-    block_ids = plan_meta["block_ids"]
     has_hubs = plan_meta["has_hubs"]
-    if has_hubs:
-        # hub replicas are few by definition (out_deg > edges_per_block);
-        # their ids become a literal filter and their replica table a
-        # broadcast — nothing hub-related ever shuffles
-        hub_reps = blocks_assign.filter("n_rep > 1").select(
-            "v", "block_id", "rkey", "rsize"
-        )
-        hub_reps = hub_reps.persist(StorageLevel.MEMORY_AND_DISK)
-        hub_ids = sorted({r["v"] for r in hub_reps.select("v").distinct().collect()})
-    else:
-        hub_reps, hub_ids = None, []
-    # vertex set: srcs come free from the planner's cached O(V) degree
-    # table; only the dst side pays a distinct over the cached
-    # src-partitioned edges — the raw edge source is never re-read
-    verts = (
-        vertices.select(F.col("vid").alias("v"))
-        if vertices is not None
-        else plan_meta["out_deg"].select("v")
-        .unionByName(
-            plan_meta["edges_src_partitioned"].select(F.col("dst").alias("v"))
-        )
-        .distinct()
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    # every replica row of a split vertex (a lone replica other than 0
+    # counts too: the router must not send its coupons to replica 0)
+    hub_rows = [
+        tuple(r)
+        for r in blocks_assign.filter("n_rep > 1 OR replica > 0")
+        .select("v", "block_id", "rkey", "rsize").collect()
+    ] if has_hubs else []
+    plan = _route_plan(plan_meta["bounds"], plan_meta["block_ids"], hub_rows)
+    layout = hashlib.sha1(
+        repr((plan_meta["bounds"], plan_meta["block_ids"], sorted(hub_rows)))
+        .encode()
+    ).hexdigest()
 
-    def _routed(arr: DataFrame, route_step: int) -> DataFrame:
-        """(v, c) rows → (block_id, rkey, c). Duplicate v rows are allowed
-        (the fast path's arrivals carry one row per emitting block).
-        Non-hub rows route via the pure boundary expression; hub rows are
-        totalled per vertex first — the multinomial must split each
-        vertex's TOTAL exactly once — then split across replicas
-        (seeded per (seed, route_step, v), so the fast path's
-        route-at-production and the durable path's route-at-consumption
-        draw the same splits for the same logical superstep)."""
-        rkey = F.shiftleft(F.col("v"), REPLICA_BITS)
-        base = arr
-        if has_hubs:
-            base = arr.filter(~F.col("v").isin(hub_ids))
-        r = base.select(
-            route_expr(rkey, bounds, block_ids).alias("block_id"),
-            rkey.alias("rkey"),
-            "c",
-        )
-        if has_hubs:
-            split = (
-                arr.filter(F.col("v").isin(hub_ids))
-                .groupBy("v").agg(F.sum("c").alias("c"))
-                .join(F.broadcast(hub_reps), "v")
-                .select("v", "block_id", "rkey", "rsize", "c")
-                .groupBy("v")
-                .applyInPandas(
-                    _route_kernel(seed, route_step),
-                    schema="block_id int, rkey long, c long",
-                )
-            )
-            r = r.unionByName(split)
-        return r
-
-    def _build_state(r: DataFrame, obs: Observation | None) -> DataFrame:
-        """Init state (fast path): routed init coupons → ONE exchange by
-        block_id; the (block_id, rkey) coalescing aggregate runs on that
-        same partitioning (hash(block_id) clusters every (block_id, rkey)
-        pair — no second exchange). The caller materializes the result to
-        scratch PARQUET, not ``localCheckpoint``: a checkpointed RDD's
-        preserved hashpartitioning holds attribute ids that go stale when
-        the analyzer's DeduplicateRelations re-ids the scan's copies (the
-        fused segment plan references the state once per ζ branch), and a
-        canonically-unequal leaf poisons every exchange above it — no
-        ReusedExchange, O(steps²) kernel recompute. A parquet scan
-        canonicalizes cleanly; the one hash(block_id) exchange the kernel
-        inserts above it is itself reused across all consumers."""
-        st = (
-            r.repartition(n_parts, "block_id")
+    def _coalesce(routed: DataFrame) -> DataFrame:
+        """Routed rows → coupon state: ONE exchange by block_id, and the
+        (block_id, rkey) aggregate runs on that same partitioning."""
+        return (
+            routed.repartition(n_parts, "block_id")
             .groupBy("block_id", "rkey")
             .agg(F.sum("c").alias("c"))
         )
-        if obs is not None:
-            st = st.observe(obs, F.sum("c").alias("total"))
-        return st
+
+    def _walk(coupons: DataFrame, step: int) -> DataFrame:
+        return coupons.groupBy("block_id").applyInArrow(
+            _step_kernel(csr_path, eps, seed, step, plan), schema=ROUTED_SCHEMA
+        )
 
     ckpt = None
     start_step = 0
-    step_coupons: list[DataFrame] = []  # arrivals per superstep (+ init ζ=K)
+    step_coupons: list[DataFrame] = []  # routed coupons per step (+ init)
     if checkpoint_dir:
-        ckpt = CheckpointManager(
-            spark, checkpoint_dir,
-            {"algo": "pagerank_mc", "K": K, "eps": eps, "seed": seed},
-        )
+        run_config = {
+            "algo": "pagerank_mc", "K": K, "eps": eps, "seed": seed,
+            "layout": layout,
+        }
+        ckpt = CheckpointManager(spark, checkpoint_dir, run_config)
         if resume:
             last = ckpt.last_complete_step()
             if last is not None:
+                stored = (ckpt.manifest(last) or {}).get("run_config")
+                if stored != run_config:
+                    raise ValueError(
+                        f"cannot resume from {checkpoint_dir}: it was written "
+                        f"with run config {stored}, this run has {run_config} "
+                        "(a checkpoint without 'layout' holds the older "
+                        "vertex-keyed coupon format); rerun with resume=False"
+                    )
                 step_coupons = [
                     ckpt.load_tables(s, ["coupons"])["coupons"]
                     for s in range(-1, last + 1)
@@ -742,25 +734,44 @@ def pagerank_monte_carlo(
         else:
             ckpt.clear()
     fast = ckpt is None  # scratch path: in-memory partition-preserving
-    # superstep chain (see _build_state); the durable path keeps the
-    # parquet-per-step flow so checkpoints stay resumable files
+    # superstep chain; the durable path commits each step's routed table
     aqe_prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
     if fast:
         spark.conf.set("spark.sql.adaptive.enabled", "false")
     if start_step == 0:
-        init = verts.select("v", F.lit(int(K)).cast("long").alias("c"))
+        # vertex set: srcs come free from the planner's cached O(V) degree
+        # table; only the dst side pays a distinct over the cached
+        # src-partitioned edges — the raw edge source is never re-read
+        verts = (
+            vertices.select(F.col("vid").alias("v"))
+            if vertices is not None
+            else plan_meta["out_deg"].select("v")
+            .unionByName(
+                plan_meta["edges_src_partitioned"].select(F.col("dst").alias("v"))
+            )
+            .distinct()
+        )
+        init = _coalesce(
+            verts.mapInArrow(_init_router(plan, K, seed), ROUTED_SCHEMA)
+        )
         if ckpt:
             coupons = ckpt.save_step(-1, {"coupons": init}, {"init": True})[
                 "coupons"
             ]
             step_coupons = [coupons]
         else:
-            state = store.materialize(_build_state(_routed(init, 0), None),
-                                      "mcstate")
+            # scratch PARQUET, not localCheckpoint: a checkpointed RDD's
+            # preserved hashpartitioning holds attribute ids that go stale
+            # when the analyzer's DeduplicateRelations re-ids the scan's
+            # copies (the fused plan references the state once per ζ
+            # branch), and a canonically-unequal leaf poisons every
+            # exchange above it — no ReusedExchange, O(steps²) kernel
+            # recompute. A parquet scan canonicalizes cleanly.
+            state = store.materialize(init, "mcstate")
 
     for df in plan_meta["cached"]:  # planner pins (edges exchange, degree
         df.unpersist()  # table, block assignment) end with setup — the
-        # loop reads only the CSR side-files, bounds, and hub broadcast
+        # loop reads only the CSR side-files and the route plan
     steps_run = start_step
     step_secs: list[float] = []  # fast: per-SEGMENT wall; durable: per-step
     step_totals: list[int] = []  # surviving walks per superstep (observed)
@@ -768,25 +779,16 @@ def pagerank_monte_carlo(
     try:
         if fast:
             # WHOLE-LOOP FUSION: ``fuse_steps`` supersteps compile into ONE
-            # Spark job. Per step the plan is [complete (block_id, rkey)
-            # agg → sort → walk kernel → expression route → exchange by
-            # block_id] — a single stage, because the agg and the grouped-
-            # map kernel both run on the hash(block_id) partitioning the
-            # step's one exchange established (clustering by a subset of
-            # the grouping keys needs no second exchange). Each step's
-            # exchange is consumed TWICE in the same plan — by the next
-            # step's agg and by the segment's ζ union — which costs one
-            # shuffle, not two: ReusedExchange dedupes the identical
-            # subtree (asserted by tests/test_pagerank.py fused-plan
-            # test). Versus the round-2 per-step-job design this removes,
-            # per superstep: one stage barrier, one job submit/teardown
-            # gap, and one localCheckpoint store+rescan — fixed costs that
-            # dominated the 4N-core legs of the scaling run (measured
-            # utilization 0.78 at 8 cores vs 0.98 at 2 with per-step jobs).
-            # Per-step surviving-walk totals ride the segment job as
-            # CollectMetrics on the ζ branches; extinction therefore
-            # short-circuits at segment granularity (a post-extinction
-            # step inside a segment walks an empty state — a no-op).
+            # Spark job, one stage per step: [complete (block_id, rkey)
+            # agg → walk UDF → exchange by block_id]. Each step's exchange
+            # is consumed TWICE in the same plan — by the next step's agg
+            # and by the segment's ζ union — which costs one shuffle, not
+            # two: ReusedExchange dedupes the identical subtree (asserted
+            # by tests/test_pagerank.py fused-plan test). Per-step
+            # surviving-walk totals ride the segment job as CollectMetrics
+            # on the ζ branches; extinction therefore short-circuits at
+            # segment granularity (a post-extinction step inside a segment
+            # walks an empty state — a no-op).
             z_acc = state.select("rkey", "c")  # init arrivals: ζ = K
             agged = state
             step = start_step
@@ -796,16 +798,7 @@ def pagerank_monte_carlo(
                 obs_by_step: dict[int, Observation] = {}
                 branches = [z_acc]
                 for s in seg:
-                    moved = agged.groupBy("block_id").applyInArrow(
-                        _walk_kernel(csr_path, eps, seed, s),
-                        schema="dst long, cnt long",
-                    )
-                    exch = _routed(
-                        moved.select(
-                            F.col("dst").alias("v"), F.col("cnt").alias("c")
-                        ),
-                        s + 1,  # consumed by the NEXT superstep
-                    ).repartition(n_parts, "block_id")
+                    exch = _walk(agged, s).repartition(n_parts, "block_id")
                     obs = Observation(f"mc_step_{s}")
                     obs_by_step[s] = obs
                     branches.append(
@@ -840,8 +833,7 @@ def pagerank_monte_carlo(
                 # parquet erases partitioning, so the next segment's first
                 # kernel re-exchanges the carry-over state — one small
                 # (O(occupied vertices)) exchange per SEGMENT, the price
-                # of bounding plan size (see _build_state for why parquet,
-                # not localCheckpoint, backs the segment boundary)
+                # of bounding plan size
                 agged = seg_out.filter("tag = 0").select(
                     "block_id", "rkey", "c"
                 )
@@ -861,22 +853,14 @@ def pagerank_monte_carlo(
             for step in range(start_step, iterations):
                 t_step = time.time()
                 obs = Observation(f"mc_step_{step}")
-                # narrow expression routing: coupon → (block_id, rkey) with
-                # zero joins; hub coupons peel off to the multinomial splitter
-                routed = _routed(coupons, step)
-                moved = routed.groupBy("block_id").applyInArrow(
-                    _walk_kernel(csr_path, eps, seed, step),
-                    schema="dst long, cnt long",
-                )
-                # global coalescing: partial+final hash agg (reference
-                # reduceByKey :119) — also the re-reduce of hub partials
-                new_coupons = (
-                    moved.groupBy(F.col("dst").alias("v"))
-                    .agg(F.sum("cnt").alias("c"))
-                )
+                # the same walk UDF as the fast path; its routed output is
+                # coalesced and committed, so a resume re-enters here with
+                # exactly the state an uninterrupted run would hold. The
                 # surviving-walk total rides the write job as an observed
                 # metric — extinction check costs no extra job
-                observed = new_coupons.observe(obs, F.sum("c").alias("total"))
+                observed = _coalesce(_walk(coupons, step)).observe(
+                    obs, F.sum("c").alias("total")
+                )
                 coupons = ckpt.save_step(
                     step, {"coupons": observed}, {"superstep": step}
                 )["coupons"]
@@ -892,24 +876,16 @@ def pagerank_monte_carlo(
             spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
 
     t_loop_end = time.time()
-    # ζ = K + Σ arrivals. Fast path: the segment jobs already folded every
-    # step's arrivals into the checkpointed (rkey, c) accumulator — the
-    # finalize below only folds hub replicas (v = rkey >> REPLICA_BITS;
-    # the multinomial conserves each vertex's total, so per-v sums equal
-    # the durable path's exactly) and normalizes. Durable path: ONE
-    # union+groupBy over the per-step parquet tables, never a per-step
-    # re-aggregation (the reference union+reduceByKey's doubled shuffle,
-    # MonteCarloPageRank.scala:122).
-    if fast:
-        all_arrivals = z_acc.select(
-            F.shiftright("rkey", REPLICA_BITS).alias("v"),
-            F.col("c").alias("z"),
-        )
-    else:
-        all_arrivals = reduce(
-            DataFrame.unionByName,
-            [df.select("v", F.col("c").alias("z")) for df in step_coupons],
-        )
+    # ζ = K + Σ arrivals, folded per vertex (v = rkey >> REPLICA_BITS; the
+    # multinomial conserves each hub's total). Fast path: the segment jobs
+    # already folded every step into the (rkey, c) accumulator. Durable
+    # path: ONE union+groupBy over the per-step parquet tables, never a
+    # per-step re-aggregation (the reference union+reduceByKey's doubled
+    # shuffle, MonteCarloPageRank.scala:122).
+    all_arrivals = reduce(
+        DataFrame.unionByName,
+        [df.select("rkey", "c") for df in ([z_acc] if fast else step_coupons)],
+    ).select(F.shiftright("rkey", REPLICA_BITS).alias("v"), F.col("c").alias("z"))
     obs_total = Observation("mc_total")
     visits = store.materialize(
         all_arrivals.groupBy("v")
@@ -919,7 +895,6 @@ def pagerank_monte_carlo(
     )
     total = obs_total.get["t"]
     if total is None:  # empty graph: no vertices at all
-        verts.unpersist()
         empty = spark.createDataFrame([], "v long, rank double")
         return empty, {
             "iterations": 0, "K": K, "seed": seed, "total_visits": 0,
@@ -930,14 +905,11 @@ def pagerank_monte_carlo(
     ranks = ranks.persist(StorageLevel.MEMORY_AND_DISK)
     ranks.count()  # pin; the scratch root (ranks' recompute source) is
     # reclaimed at interpreter exit (state.py atexit registry)
-    verts.unpersist()
-    if hub_reps is not None:
-        hub_reps.unpersist()
     info = {
         "iterations": steps_run, "K": K, "seed": seed,
         "total_visits": int(total), "eps": eps,
         "has_hub_splits": bool(has_hubs),
-        "n_blocks": len(bounds),
+        "n_blocks": len(plan.bounds),
         "setup_secs": round(t_loop - t_setup, 3),
         "loop_secs": round(t_loop_end - t_loop, 3),
         "step_secs": step_secs,

@@ -172,20 +172,21 @@ def pagerank_power(
     contrib_edges = contrib_edges.repartition(n_parts, "src").persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    # vflag is the SETUP-TIME flag source only (state init, resume
-    # backfill, personalization weights): since r4 the dang flag rides
-    # the state table itself, so the superstep loop never joins vflag —
+    # vflag is the SETUP-TIME flag source (state init, resume backfill,
+    # personalization weights): since r4 the dang flag rides the state
+    # table itself, so a standard run's superstep loop never joins vflag —
     # see the module docstring for why exchange reuse still holds with
-    # dang in the state. The explicit repartition at the cache boundary
-    # makes hash(v) partitioning visible through the cache (AQE hides it
-    # otherwise); the superstep's single write job yields the next
+    # dang in the state. Personalized runs (``sources``) are the
+    # exception: every superstep joins vflag's co-partitioned is_src.
+    # The explicit repartition at the cache boundary makes hash(v)
+    # partitioning visible through the cache (AQE hides it otherwise); the superstep's single write job yields the next
     # dangling mass as an observed metric (no per-step lookup job — the
     # reference pays a full lookup(-1) action per superstep,
     # PowerIterationPageRank.scala:111)
     vaux = deg.select("v", (F.col("out_deg") == 0).alias("dang"))
     if sources is not None:
         # personalization flag joins ONCE at setup into the same cached
-        # side table — the superstep loop never sees an extra join
+        # side table; each superstep then joins it co-partitioned
         s = sources.select("v").distinct().withColumn("is_src", F.lit(True))
         vaux = vaux.join(s, "v", "left").select(
             "v", "dang", F.coalesce("is_src", F.lit(False)).alias("is_src")

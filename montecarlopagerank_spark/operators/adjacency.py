@@ -136,14 +136,15 @@ def plan_walk_blocks(
     Returns ``(blocks_assign, csr_blocks, meta)``:
 
     * ``blocks_assign(v, replica, rkey, rsize, n_rep, block_id)`` — one row
-      per replica. Walk drivers route a vertex's coupons to its replicas
+      per replica. The walk UDF routes a vertex's coupons to its replicas
       with an exact multinomial split ∝ rsize (see pagerank_mc), so the
       per-destination distribution stays exactly uniform over out-edges:
       P(dst) = (rsize/deg) · (1/rsize) = 1/deg.
     * ``csr_blocks(block_id, vids=rkeys, indptr, indices)`` — CSR rows keyed
       by rkey. Totals are exact because the multinomial split conserves
       coupon counts (the "partial-aggregated then re-reduced" step is the
-      ordinary groupBy(dst) coalescing downstream of the kernel).
+      ordinary (block_id, rkey) coalescing of the routed arrivals, and
+      rkey >> REPLICA_BITS folds the replicas back together at finalize).
     * ``meta = {"has_hubs": bool, "max_out_deg": int}``.
 
     Fast path: when max(out_deg) ≤ edges_per_block (no hubs — the common
@@ -196,8 +197,8 @@ def plan_walk_blocks(
         # with the graph), hub splitting answers "can one task hold one
         # vertex's edges" (an absolute memory/latency question). Tying
         # hubs to the parallelism-derived size made a 20k-degree vertex
-        # on a 230k-edge graph a "hub", dragging the per-step multinomial
-        # router into every superstep for zero skew benefit. 256k edges
+        # on a 230k-edge graph a "hub", paying replica planning and
+        # per-step hub splits for zero skew benefit. 256k edges
         # (~4 MB of int32 CSR) is far below any task budget, so only
         # genuinely pathological vertices split. An EXPLICIT
         # edges_per_block keeps the coupled behavior (tests force hubs
@@ -328,11 +329,12 @@ def plan_walk_blocks(
     csr = joined.groupBy("block_id").applyInArrow(pack, schema=schema)
     # block boundaries: blocks pack CONTIGUOUS rkey ranges (block_id is a
     # monotone step function of rkey by construction of the prefix sum), so
-    # the per-superstep coupon→block routing is a pure expression over these
-    # boundaries (see pagerank_mc.route_expr) — no routing-table join and no
-    # extra shuffle per step. One small collect at plan time; the boundary
-    # count is the block count (sized ~2-3x total cores, so ≤ ~10^4 even on
-    # a 1000-executor cluster — fine as a driver list / literal).
+    # the per-superstep coupon→block routing is a numpy searchsorted over
+    # these boundaries inside the walk UDF (see pagerank_mc._block_of) — no
+    # routing-table join and no extra shuffle per step. One small collect
+    # at plan time; the boundary count is the block count (sized ~2-3x
+    # total cores, so ≤ ~10^4 even on a 1000-executor cluster — a small
+    # array shipped with the UDF).
     # NOTE: block ids can SKIP values — row weight is rsize+1, so a vertex
     # with out_deg == edges_per_block advances the prefix by epb+1 and the
     # floor-division jumps past an id (hub replicas can jump further via

@@ -56,3 +56,14 @@ def gnutella_mini_pairs():
 @pytest.fixture(scope="session")
 def gnutella_mini(spark, gnutella_mini_pairs):
     return edges_df(spark, gnutella_mini_pairs)
+
+
+@pytest.fixture(scope="session")
+def hub_graph(spark):
+    """Mega-hub 0 with 400 out-spokes; every spoke points back at the hub,
+    plus a chain among spokes so the graph isn't purely bipartite. Any
+    edges_per_block below 400 (tests use 64) splits the hub."""
+    rows = [(0, i) for i in range(1, 401)]
+    rows += [(i, 0) for i in range(1, 401)]
+    rows += [(i, i + 1) for i in range(1, 400)]
+    return edges_df(spark, rows).persist()

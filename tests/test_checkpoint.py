@@ -61,7 +61,9 @@ def test_pi_resume_on_converged_run_is_noop(spark, cycle5, tmp_path):
 
 def test_mc_resume_identical(spark, gnutella_mini, tmp_path):
     """MC resume: visits/coupons restored from the manifest-committed step;
-    block-seeded RNG makes the continuation byte-identical."""
+    block-seeded RNG makes the continuation byte-identical. The durable
+    and scratch paths share one walk UDF and router, so the scratch run
+    lands on the same ranks too."""
     full_dir = str(tmp_path / "mcfull")
     part_dir = str(tmp_path / "mcpart")
     full, _ = pagerank_monte_carlo(
@@ -75,6 +77,32 @@ def test_mc_resume_identical(spark, gnutella_mini, tmp_path):
         checkpoint_dir=part_dir, resume=True)
     assert info["iterations"] == 8
     assert ranks_dict(full) == ranks_dict(resumed)
+    scratch, _ = pagerank_monte_carlo(
+        spark, gnutella_mini, walks_per_vertex=20, iterations=8, seed=5)
+    assert ranks_dict(scratch) == ranks_dict(full)
+
+
+def test_mc_resume_rejects_foreign_checkpoint(spark, gnutella_mini, tmp_path):
+    """A checkpoint in the older vertex-keyed coupon format (v, c), or one
+    written under another block layout, must not resume: the routed
+    (block_id, rkey, c) state would be misread. Resume raises instead."""
+    old = str(tmp_path / "mcold")
+    ck = CheckpointManager(spark, old, {"algo": "pagerank_mc", "K": 20,
+                                        "eps": 0.15, "seed": 5})
+    ck.save_step(-1, {"coupons": spark.createDataFrame(
+        [(0, 20), (1, 20)], "v long, c long")}, {"init": True})
+    with pytest.raises(ValueError, match="resume=False"):
+        pagerank_monte_carlo(
+            spark, gnutella_mini, walks_per_vertex=20, iterations=3, seed=5,
+            checkpoint_dir=old, resume=True)
+    other = str(tmp_path / "mcother")
+    pagerank_monte_carlo(
+        spark, gnutella_mini, walks_per_vertex=20, iterations=2, seed=5,
+        checkpoint_dir=other, edges_per_block=1 << 12)
+    with pytest.raises(ValueError, match="layout"):
+        pagerank_monte_carlo(
+            spark, gnutella_mini, walks_per_vertex=20, iterations=3, seed=5,
+            checkpoint_dir=other, edges_per_block=64, resume=True)
 
 
 def test_cc_resume_identical(spark, gnutella_mini, tmp_path):

@@ -97,6 +97,40 @@ def test_mc_pi_agreement_floor(spark):
     assert row["rank_corr"] >= 0.9, row
 
 
+def test_pca_project_embeddings_is_flat(spark):
+    """pca_project_embeddings returns long-form scalar rows (vec_id, dim,
+    val_r4) — k=8 per vector, matching the nested projection — and
+    tools/check_oracles.py fails any query with a nested column."""
+    import __spark_entry__ as entry
+    import pyarrow as pa
+
+    from tools.check_oracles import nested_columns
+
+    at = entry.queries()["pca_project_embeddings"](spark, SF_DIR).toArrow()
+    assert at.schema.names == ["vec_id", "dim", "val_r4"]
+    assert [str(t) for t in at.schema.types] == ["int64", "int64", "double"]
+    assert nested_columns(at.schema) == []
+    df = at.to_pandas()
+    assert len(df) == 8 * df["vec_id"].nunique()
+    assert sorted(df["dim"].unique()) == list(range(8))
+    nested = pa.schema([("a", pa.int64()), ("pc_r4", pa.list_(pa.float64())),
+                        ("m", pa.map_(pa.string(), pa.int64())),
+                        ("s", pa.struct([("x", pa.int64())]))])
+    assert [c.split(":")[0] for c in nested_columns(nested)] == [
+        "pc_r4", "m", "s"]
+
+
+def test_bench_load_warning():
+    """bench.py marks a run that started with the 1-minute loadavg above
+    cpus/4, and only then."""
+    from bench import load_warning
+
+    assert load_warning(0.9, 4) is None
+    assert load_warning(1.0, 4) is None
+    assert "exceeds cpus/4" in load_warning(1.01, 4)
+    assert load_warning(2.5, 8) is not None
+
+
 def test_mat_materializes_every_cte_idempotently():
     """contract._mat must materialize every named CTE (the driver-OOM
     fix for the unrolled twins), skip self-referencing recursive CTE

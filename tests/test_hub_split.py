@@ -4,21 +4,24 @@ blocks, partial-aggregated then re-reduced").
 A vertex with out_deg > edges_per_block is split into replicas carrying
 disjoint neighbour subsets (operators/adjacency.py::plan_walk_blocks);
 coupons are routed to replicas by an exact multinomial ∝ replica size
-(algos/pagerank_mc.py::_route_kernel), so totals are conserved exactly
-and the per-destination law stays uniform: these tests pin conservation,
-block spread, statistical agreement with PI, and parallelism invariance
-of the split path.
+inside the walk UDF (algos/pagerank_mc.py::_step_kernel), so totals are
+conserved exactly and the per-destination law stays uniform: these tests
+pin conservation, block spread, statistical agreement with PI, and
+parallelism invariance of the split path.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
 from montecarlopagerank_spark.algos.pagerank_mc import (
-    _route_kernel,
+    _publish_block,
+    _route_plan,
+    _step_kernel,
     pagerank_monte_carlo,
 )
 from montecarlopagerank_spark.algos.pagerank_power import pagerank_power
@@ -30,16 +33,6 @@ from montecarlopagerank_spark.operators.adjacency import (
 
 def ranks_dict(df):
     return {r["v"]: r["rank"] for r in df.collect()}
-
-
-@pytest.fixture(scope="module")
-def hub_graph(spark):
-    """Mega-hub 0 with 400 out-spokes; every spoke points back at the hub,
-    plus a chain among spokes so the graph isn't purely bipartite."""
-    rows = [(0, i) for i in range(1, 401)]
-    rows += [(i, 0) for i in range(1, 401)]
-    rows += [(i, i + 1) for i in range(1, 400)]
-    return spark.createDataFrame(rows, "src long, dst long").persist()
 
 
 def test_plan_walk_blocks_splits_hub(spark, hub_graph):
@@ -69,22 +62,37 @@ def test_plan_walk_blocks_no_split_below_threshold(spark, hub_graph):
     assert assign.filter("v = 0").count() == 1
 
 
-def test_route_kernel_exact_conservation():
-    pdf = pd.DataFrame(
-        {
-            "v": [7, 7, 7],
-            "block_id": [2, 5, 9],
-            "rkey": [(7 << REPLICA_BITS) + r for r in range(3)],
-            "rsize": [100, 50, 25],
-            "c": [1000, 1000, 1000],  # same vertex count on every row
-        }
+def test_hub_split_exact_conservation(tmp_path):
+    """The in-kernel split: a block whose one vertex points only at hub 7
+    sends all its surviving walks there, and the walk UDF splits them
+    across the hub's replicas. Spark-free: the block is published as the
+    mmap side-files the kernel reads."""
+    root = str(tmp_path)
+    src = np.array([1 << REPLICA_BITS], dtype=np.int64)
+    for bid in (0, 1):  # the same CSR under two block ids
+        _publish_block(root, bid, (src, np.array([0, 1]), np.array([7])))
+    plan = _route_plan(
+        [0, 5 << REPLICA_BITS], [0, 1],
+        [(7, b, (7 << REPLICA_BITS) + r, size)
+         for r, (b, size) in enumerate([(2, 100), (5, 50), (9, 25)])],
     )
-    out1 = _route_kernel(seed=1234, step=3)(pdf.copy())
-    out2 = _route_kernel(seed=1234, step=3)(pdf.copy())
+
+    def split(block_id, step):
+        coupons = pa.table({
+            "block_id": pa.array([block_id], pa.int32()),
+            "rkey": pa.array(src),
+            "c": pa.array([1000], pa.int64()),
+        })
+        out = _step_kernel(root, 0.0, 1234, step, plan)(coupons).to_pandas()
+        return out.sort_values("rkey").reset_index(drop=True)
+
+    out1, out2 = split(0, 3), split(0, 3)
     assert int(out1["c"].sum()) == 1000  # multinomial conserves exactly
     pd.testing.assert_frame_equal(out1, out2)  # deterministic
-    out3 = _route_kernel(seed=1234, step=4)(pdf.copy())
+    out3 = split(0, 4)
     assert not out1.equals(out3)  # new draw per superstep
+    assert not out1.equals(split(1, 3))  # and per emitting block
+    assert set(out1["rkey"]) <= {(7 << REPLICA_BITS) + r for r in range(3)}
     # expectation proportional to replica sizes (loose 5-sigma check)
     frac = out1.set_index("block_id")["c"].get(2, 0) / 1000
     assert abs(frac - 100 / 175) < 5 * np.sqrt(0.57 * 0.43 / 1000) + 0.02
@@ -138,8 +146,8 @@ def test_auto_hub_threshold_decoupled_from_block_size(spark):
     hub (the auto block size lands far below its degree), while an
     EXPLICIT edges_per_block below the degree still forces the split.
     Regression: the coupled default made moderate-degree vertices hubs on
-    small graphs, dragging the per-step multinomial router (and a 3^k
-    analyzer tree in the fused loop) into every superstep."""
+    small graphs, paying replica planning and hub splits for zero skew
+    benefit."""
     pairs = [(0, d) for d in range(1, 6001)] + [(d, 0) for d in range(1, 50)]
     e = spark.createDataFrame(pairs, "src long, dst long")
     _, _, meta = plan_walk_blocks(e, edges_per_block=None, n_partitions=4)
@@ -153,12 +161,12 @@ def test_auto_hub_threshold_decoupled_from_block_size(spark):
 
 
 def test_auto_fuse_steps_follows_hub_plan(spark, hub_graph, gnutella_mini):
-    """fuse_steps=None derives the segment length from the block plan:
-    1 with split hubs (3^k analyzer tree), 6 hub-free (2^k)."""
+    """The default segment length is 6 on every graph: routing inside the
+    walk UDF gives hub and hub-free graphs the same 2^k fused plan."""
     _, i_hub = pagerank_monte_carlo(
         spark, hub_graph, walks_per_vertex=4, iterations=3, seed=7,
         edges_per_block=64)
-    assert i_hub["has_hub_splits"] and i_hub["fuse_steps"] == 1
+    assert i_hub["has_hub_splits"] and i_hub["fuse_steps"] == 6
     _, i_flat = pagerank_monte_carlo(
         spark, gnutella_mini, walks_per_vertex=4, iterations=3, seed=7)
     assert not i_flat["has_hub_splits"] and i_flat["fuse_steps"] == 6

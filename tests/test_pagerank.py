@@ -150,10 +150,10 @@ def test_mc_empty_graph(spark):
     assert info["total_visits"] == 0 and info["iterations"] == 0
 
 
-def test_route_expr_both_paths(spark):
-    """Coupon->block expression routing (pagerank_mc.route_expr) against a
-    numpy searchsorted oracle, through BOTH implementations: the chained
-    WHEN (<=512 boundaries) and the array-fold fallback (>512)."""
+def test_router_matches_searchsorted_oracle():
+    """Coupon->block routing (pagerank_mc._block_of, the numpy router
+    inside the walk UDF) against a searchsorted oracle, over a large and
+    a small boundary set, with keys on a boundary and one below it."""
     import numpy as np
 
     from montecarlopagerank_spark.algos import pagerank_mc as m
@@ -168,29 +168,24 @@ def test_route_expr_both_paths(spark):
     # oracle: index of the last boundary <= rkey
     expect = (np.searchsorted(np.asarray(bounds), rkeys, side="right") - 1)
 
-    df = spark.createDataFrame([(int(r),) for r in rkeys], "rkey long")
-    for nb in (len(bounds), 512):  # full set -> fallback; prefix -> chained
-        sub = bounds[:nb]
-        exp_sub = np.searchsorted(np.asarray(sub), rkeys, side="right") - 1
-        got = {
-            r["rkey"]: r["b"]
-            for r in df.select(
-                "rkey", m.route_expr(F.col("rkey"), sub).alias("b")
-            ).collect()
-        }
-        for rk, e in zip(rkeys.tolist(), exp_sub.tolist()):
-            assert got[rk] == e, (nb, rk)
+    for nb in (len(bounds), 512):
+        sub = np.asarray(bounds[:nb], dtype=np.int64)
+        exp_sub = np.searchsorted(sub, rkeys, side="right") - 1
+        got = m._block_of(rkeys, sub, np.arange(nb, dtype=np.int32))
+        for rk, g, e in zip(rkeys.tolist(), got.tolist(), exp_sub.tolist()):
+            assert g == e, (nb, rk)
     assert expect is not None
 
 
-def test_route_expr_sparse_block_ids(spark):
-    """route_expr must emit the ACTUAL (possibly skipping) planner block
+def test_router_sparse_block_ids():
+    """The router must emit the ACTUAL (possibly skipping) planner block
     ids, not the positional boundary index — positional ids address
-    nonexistent CSR side-files (ADVICE r2, high). Both implementations:
-    chained WHEN and array-fold fallback."""
+    nonexistent CSR side-files (ADVICE r2, high). Checked on raw rkeys
+    and through ``_route`` on vertex ids of a hub-free plan."""
     import numpy as np
 
     from montecarlopagerank_spark.algos import pagerank_mc as m
+    from montecarlopagerank_spark.operators.adjacency import REPLICA_BITS
 
     rng = np.random.default_rng(11)
     bounds = sorted({0, *rng.integers(1, 1 << 30, size=600).tolist()})
@@ -202,19 +197,22 @@ def test_route_expr_sparse_block_ids(spark):
          np.asarray(bounds[:30]),
          np.asarray([b - 1 for b in bounds[1:30]])]
     ).astype(np.int64)
-    df = spark.createDataFrame([(int(r),) for r in rkeys], "rkey long")
-    for nb in (len(bounds), 400):  # fallback path; chained path
+    for nb in (len(bounds), 400):
         sub_b, sub_i = bounds[:nb], block_ids[:nb]
         pos = np.searchsorted(np.asarray(sub_b), rkeys, side="right") - 1
         expect = np.asarray(sub_i)[pos]
-        got = {
-            r["rkey"]: r["b"]
-            for r in df.select(
-                "rkey", m.route_expr(F.col("rkey"), sub_b, sub_i).alias("b")
-            ).collect()
-        }
-        for rk, e in zip(rkeys.tolist(), expect.tolist()):
-            assert got[rk] == e, (nb, rk)
+        plan = m._route_plan(sub_b, sub_i, [])
+        got = m._block_of(rkeys, plan.bounds, plan.block_ids)
+        for rk, g, e in zip(rkeys.tolist(), got.tolist(), expect.tolist()):
+            assert g == e, (nb, rk)
+        v = np.unique(rkeys >> REPLICA_BITS)
+        c = np.arange(len(v), dtype=np.int64)
+        bid, rk, cc = m._route(plan, v, c, None)
+        vpos = np.searchsorted(np.asarray(sub_b), v << REPLICA_BITS,
+                               side="right") - 1
+        assert bid.tolist() == np.asarray(sub_i)[vpos].tolist()
+        assert rk.tolist() == (v << REPLICA_BITS).tolist()
+        assert cc.tolist() == c.tolist()
 
 
 def test_mc_skipped_block_id_walks_survive(spark):
@@ -279,7 +277,7 @@ def test_mc_state_root_file_uri_single_slash(spark, gnutella_mini, tmp_path):
     to a plain local path too — previously it passed ``_is_local`` but
     was returned unstripped, so ``_publish_block`` recreated the literal
     ``file:`` junk dir under cwd (the exact bug 470f79c fixed for the
-    double-slash form)."""
+    double-slash form). Forms that name no local absolute path raise."""
     from montecarlopagerank_spark.algos import pagerank_mc as mc
 
     assert mc._strip_file_scheme(f"file:{tmp_path}/x") == f"{tmp_path}/x"
@@ -289,6 +287,13 @@ def test_mc_state_root_file_uri_single_slash(spark, gnutella_mini, tmp_path):
     )
     assert mc._strip_file_scheme("/plain/path") is None
     assert mc._strip_file_scheme("hdfs://nn/path") is None
+    for bad in ("file://host/p", f"file://host{tmp_path}", "file:rel/p",
+                "file:./p"):
+        with pytest.raises(ValueError):
+            mc._strip_file_scheme(bad)
+    with pytest.raises(ValueError):
+        pagerank_monte_carlo(spark, gnutella_mini, iterations=1,
+                             state_root=f"file://host{tmp_path}/mc")
     r_local, _ = pagerank_monte_carlo(
         spark, gnutella_mini, walks_per_vertex=20, iterations=5, seed=3,
         edges_per_block=1 << 12,
@@ -380,35 +385,76 @@ def test_preload_all_decode_once_then_mmap(tmp_path, monkeypatch):
     assert list(got[0]) == [2 << 8, (2 << 8) + 1]  # mmap content intact
 
 
-def test_mc_fuse_invariance(spark, gnutella_mini):
+def test_walk_kernel_hub_picks_are_uniform(tmp_path):
+    """Exact picks at a hub: one vertex of degree ≈2^20 (not a power of
+    two, where float32 draws alias unevenly: -4.6% on a fifth of the
+    edges), 16 walks per edge over 16 steps, chi-square of the per-edge
+    pick counts against uniform (float32 picks score z ≈ 7 here).
+    Spark-free: the block is published as the mmap side-files the kernel
+    reads."""
+    import numpy as np
+    import pyarrow as pa
+
+    from montecarlopagerank_spark.algos import pagerank_mc as mc
+
+    deg = 1_000_003
+    root = str(tmp_path)
+    mc._publish_block(root, 0, (np.array([0], np.int64),
+                                np.array([0, deg], np.int64),
+                                np.arange(deg, dtype=np.int32)))
+    coupons = pa.table({"block_id": pa.array([0], pa.int32()),
+                        "rkey": pa.array([0], pa.int64()),
+                        "c": pa.array([deg], pa.int64())})
+    counts = np.zeros(deg, dtype=np.int64)
+    for step in range(16):
+        out = mc._walk_kernel(root, 0.0, 99, step)(coupons)
+        counts[out.column("dst").to_numpy()] += out.column("cnt").to_numpy()
+    n = int(counts.sum())
+    assert n == 16 * deg  # eps=0: every walk survives and moves
+    expect = n / deg
+    chi2 = float(((counts - expect) ** 2).sum() / expect)
+    z = (chi2 - (deg - 1)) / np.sqrt(2 * (deg - 1))
+    assert abs(z) < 4, f"per-edge picks not uniform: chi2 z-score {z:.1f}"
+
+
+def test_mc_fuse_invariance(spark, gnutella_mini, hub_graph, tmp_path):
     """fuse_steps only changes how many supersteps compile into one Spark
     job — never the walks (RNG is seeded per logical (block, step)).
     Byte-identical ranks at segment lengths 1 (per-step jobs), 3
-    (mid-loop segment boundary), and 8 (whole loop in one job)."""
-    outs = [
-        ranks_dict(pagerank_monte_carlo(
-            spark, gnutella_mini, walks_per_vertex=20, iterations=5,
-            seed=7, fuse_steps=fs)[0])
-        for fs in (1, 3, 8)
-    ]
-    assert outs[0] == outs[1] == outs[2]
+    (mid-loop segment boundary), and 8 (whole loop in one job), on a
+    hub-free graph and on a split-hub graph, where the durable
+    (checkpointed) path must agree as well."""
+    for edges, epb in ((gnutella_mini, None), (hub_graph, 64)):
+        outs = [
+            ranks_dict(pagerank_monte_carlo(
+                spark, edges, walks_per_vertex=20, iterations=5,
+                seed=7, fuse_steps=fs, edges_per_block=epb)[0])
+            for fs in (1, 3, 8)
+        ]
+        assert outs[0] == outs[1] == outs[2]
+    durable, info = pagerank_monte_carlo(
+        spark, hub_graph, walks_per_vertex=20, iterations=5, seed=7,
+        edges_per_block=64, checkpoint_dir=str(tmp_path / "ck"))
+    assert info["has_hub_splits"]
+    assert ranks_dict(durable) == outs[0]
 
 
-def test_mc_fused_kernel_runs_once_per_step(spark, gnutella_mini,
+def test_mc_fused_kernel_runs_once_per_step(spark, gnutella_mini, hub_graph,
                                             monkeypatch, tmp_path):
     """The fused segment plan consumes each step's routed exchange twice
     (next step's agg + the ζ union); ReusedExchange must dedupe it so the
-    walk kernel of step s executes exactly n_blocks(s) times, not
+    walk UDF of step s executes exactly n_blocks(s) times, not
     O(steps - s) times (exponential recompute if a leaf fails to
     canonicalize — the localCheckpoint stale-partitioning trap documented
-    in _build_state)."""
+    at the init-state materialization). Checked on a hub-free graph and
+    on a split-hub graph, whose segments now fuse too."""
     import json
     import montecarlopagerank_spark.algos.pagerank_mc as mc
     log = tmp_path / "kernel_calls.jsonl"
-    orig = mc._walk_kernel
+    orig = mc._step_kernel
 
-    def counting(csr_path, eps, seed, step):
-        k = orig(csr_path, eps, seed, step)
+    def counting(csr_path, eps, seed, step, plan):
+        k = orig(csr_path, eps, seed, step, plan)
 
         def wrapped(t):
             with open(log, "a") as f:
@@ -417,21 +463,24 @@ def test_mc_fused_kernel_runs_once_per_step(spark, gnutella_mini,
 
         return wrapped
 
-    monkeypatch.setattr(mc, "_walk_kernel", counting)
-    _, info = mc.pagerank_monte_carlo(
-        spark, gnutella_mini, walks_per_vertex=4, iterations=4, seed=3,
-        fuse_steps=8)
-    per_step = {}
-    with open(log) as f:
-        for line in f:
-            s = json.loads(line)["step"]
-            per_step[s] = per_step.get(s, 0) + 1
-    n_blocks = info["n_blocks"]
-    assert set(per_step) == {0, 1, 2, 3}
-    for s, n in per_step.items():
-        assert n <= n_blocks, (
-            f"step {s} kernel ran {n}× for {n_blocks} blocks — "
-            "exchange reuse is broken (recompute per consumer)")
+    monkeypatch.setattr(mc, "_step_kernel", counting)
+    for edges, epb in ((gnutella_mini, None), (hub_graph, 64)):
+        log.unlink(missing_ok=True)
+        _, info = mc.pagerank_monte_carlo(
+            spark, edges, walks_per_vertex=4, iterations=4, seed=3,
+            fuse_steps=8, edges_per_block=epb)
+        assert info["has_hub_splits"] == (epb is not None)
+        per_step = {}
+        with open(log) as f:
+            for line in f:
+                s = json.loads(line)["step"]
+                per_step[s] = per_step.get(s, 0) + 1
+        n_blocks = info["n_blocks"]
+        assert set(per_step) == {0, 1, 2, 3}
+        for s, n in per_step.items():
+            assert n <= n_blocks, (
+                f"step {s} kernel ran {n}× for {n_blocks} blocks — "
+                "exchange reuse is broken (recompute per consumer)")
 
 
 def test_pi_warm_start_incremental(spark, gnutella_mini, gnutella_mini_pairs):

@@ -2,7 +2,8 @@
 at sf0.01 (mirrors the driver's CORRECTNESS gate).
 
 Usage: python tools/check_oracles.py [sf_dir] [query ...]
-Compares row count, column names, Arrow-level column TYPES (strict — a
+Fails any query that returns a nested (list/map/struct) column, then
+compares row count, column names, Arrow-level column TYPES (strict — a
 DuckDB decimal128 vs Spark int64 mismatch is a FAIL here, exactly as it
 is at the driver's typed hash; r4's `vertex_features` red row survived
 two rounds because the old pandas-object stringification hid it), and
@@ -61,6 +62,13 @@ def canon_type(t: pa.DataType) -> str:
     return str(t)
 
 
+def nested_columns(schema: pa.Schema) -> list[str]:
+    """Columns of a nested Arrow type (list/map/struct). Every registry
+    query must return flat scalar columns: a row-canonicalizing hash has
+    no canonical form for nested values."""
+    return [f"{f.name}: {f.type}" for f in schema if pa.types.is_nested(f.type)]
+
+
 def type_mismatches(sa: pa.Schema, oa: pa.Schema) -> list[str]:
     """Strictly compare two Arrow schemas by column name (order-free)."""
     smap = {f.name: canon_type(f.type) for f in sa}
@@ -103,6 +111,11 @@ def main() -> int:
             spdf = sat.to_pandas()
         except Exception as ex:
             print(f"FAIL  {name}: spark error {type(ex).__name__}: {ex}")
+            n_fail += 1
+            continue
+        nested = nested_columns(sat.schema)
+        if nested:
+            print(f"FAIL  {name}: nested columns: {'; '.join(nested)}")
             n_fail += 1
             continue
         if name not in oracles:
